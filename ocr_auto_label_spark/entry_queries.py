@@ -2067,23 +2067,16 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens").alias("v2"),
     )
     # BPE tokenizer training (Sennrich et al. 2016) on the same corpus:
-    # the ordered merge table (one bounded driver row per step), the
-    # final symbol inventory, and the per-doc token counts after merges
-    # — the DuckDB oracle replays the full training loop as a static
-    # chained-CTE program (argmax pair per step, then the same
-    # boundary-safe replace() rewrite)
+    # the ordered merge table, the final symbol inventory, and the
+    # per-doc token counts after merges — the DuckDB oracle replays the
+    # greedy algorithm as a static chained-CTE program (argmax pair per
+    # step, then a boundary-safe replace() rewrite)
     from ocr_auto_label_spark.operators.bpe import (
         bpe_segment_counts,
         bpe_train,
         bpe_vocab,
     )
 
-    # the per-merge-job loop, deliberately: this entry's oracle replays
-    # THAT algorithm CTE-for-CTE, and its localCheckpoint'd vocabulary
-    # frame re-reads faster in the three bpe union legs than the fast
-    # trainer's driver-local relation (measured: encode leg 0.3 → 0.97 s
-    # with the swap).  The incremental trainer is exercised by the
-    # curation job, the bench bpe block, and the pytest identity.
     bmerges, bwords = bpe_train(docs, _BPE_MERGES)
     bpe_merge = spark.createDataFrame(
         [

@@ -1,28 +1,27 @@
-"""Arrow-vectorized pandas UDFs wrapping the pure-Python labelcore.
+"""The Arrow-vectorized pandas UDF wrapping the pure-Python labelcore.
 
 Contract (BASELINE.json north_star): **zero per-row Python UDFs** — every
 Python crossing is an Arrow-batched ``pandas_udf`` (``ArrowEvalPython`` in
 the physical plan, never ``BatchEvalPython``; asserted in tests).
 
 Vectorization strategy for the extraction UDF:
-  1. a vectorized ``Series.str.contains`` prefilter skips the ~60% of
-     turns with no label-shaped token at all,
-  2. surviving rows run the span scan (``re.finditer`` must yield offsets,
-     which pandas ``str`` ops cannot),
-  3. token-level results are memoized per batch — labels repeat heavily,
-     so grammar validation / confusion fan-out / fuzzy match run once per
-     distinct token, not once per occurrence.
+  1. every non-empty ``text``/``tool`` value runs the span scan directly
+     (``re.finditer`` must yield offsets, which pandas ``str`` ops cannot;
+     on a turn with no label-shaped token it costs the one scan a
+     prefilter would),
+  2. token-level results go through the lru-cached ``analyze_token`` —
+     labels repeat heavily, so grammar validation / confusion fan-out /
+     fuzzy match run once per distinct token, not once per occurrence.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from ocr_auto_label_spark.labelcore.boilerplate import normalize_text
 from ocr_auto_label_spark.labelcore.extract import _SOURCE_ORDER, TOKEN_RE, analyze_token
-from ocr_auto_label_spark.schemas import CANDIDATE_SCHEMA, EXTRACT_RESULT_SCHEMA
+from ocr_auto_label_spark.schemas import EXTRACT_RESULT_SCHEMA
 
 
 def _normalize_series(s: pd.Series) -> pd.Series:
@@ -32,11 +31,6 @@ def _normalize_series(s: pd.Series) -> pd.Series:
     scalar function costs the same per row while its match-impossible
     gates skip ~40% of the regex scans on typical turns."""
     return s.map(normalize_text, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def normalize_text_udf(s: pd.Series) -> pd.Series:
-    return _normalize_series(s)
 
 
 def _scan_row(raw: str, source_col: str) -> list[dict]:
@@ -99,9 +93,3 @@ def extract_turn_udf(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
     embarrassingly parallel per turn.
     """
     return _extract_batch(text, tool)
-
-
-@pandas_udf(ArrayType(CANDIDATE_SCHEMA))
-def extract_candidates_udf(text: pd.Series, tool: pd.Series) -> pd.Series:
-    """Array-only variant (no normalized text) for span-level consumers."""
-    return _extract_batch(text, tool)["candidates"]

@@ -1,7 +1,10 @@
 """The extraction core: raw turn payload → normalized text + ranked label candidates.
 
-Pipeline per turn (pure Python; wrapped by the Arrow pandas UDF in
-``functions/udfs.py`` — same module, so byte-equal by construction):
+Pipeline per turn (pure Python).  The Arrow pandas UDF in
+``functions/udfs.py`` is a separate batch loop that calls this module's
+``TOKEN_RE``, ``analyze_token`` and source order (plus
+``boilerplate.normalize_text``); tests compare the two outputs byte for
+byte:
 
   1. candidate token scan over the *raw* string (spans index into the raw
      payload, FIXTURES.md §3)

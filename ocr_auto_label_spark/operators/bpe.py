@@ -1,4 +1,4 @@
-"""Distributed BPE tokenizer training (Sennrich et al. 2016,
+"""BPE tokenizer training (Sennrich et al. 2016,
 "Neural Machine Translation of Rare Words with Subword Units" §3.2).
 
 The classic algorithm: start from characters, repeatedly merge the most
@@ -8,42 +8,32 @@ distinct-value compression every heavy operator here uses (a 100 TB
 corpus has ~10⁷–10⁸ distinct words, not 10¹²; all pair counting happens
 on that vocabulary table, never on the token stream).
 
-Representation trick that keeps BOTH engines (Spark and the DuckDB
-oracle) on identical, trivially-deterministic code: a word's symbol
-sequence is a STRING — symbols joined by two spaces, padded with one
-space on each end (symbols never contain whitespace, by tokenization).
-One merge step is then a single literal ``replace(seq, ' a  b ', ' ab ')``:
-`replace` scans left-to-right non-overlapping in Spark (Java
-``String.replace``), DuckDB, and Python alike, which is EXACTLY the
-greedy BPE merge semantics including the ``a a a → (aa) a`` case, and
-the one-vs-two-space framing makes cross-symbol-boundary false matches
-impossible ('xa b' does not contain ' a  b ').
+Shape (the production tokenizer-trainer design — HuggingFace tokenizers
+and SentencePiece train this way): ONE distributed, map-side-combined
+word count; a BOUNDED driver pull of its top ``max_vocab`` rows by
+(cnt DESC, word) — the cap is every production trainer's min-frequency
+cutoff; then the merge loop runs locally as incremental pair-count
+maintenance (O(affected words) per merge, so 32k merges stay one Spark
+job, not 32k).  Ties break by (count DESC, a ASC, b ASC), a total order,
+so training is bit-reproducible at any parallelism and replayable as a
+static chained-CTE SQL oracle.
 
-Each training step is one map-side-combined pair-count aggregate over
-the vocabulary plus a SINGLE-ROW driver pull (the argmax pair — the
-bounded-pull pattern of connected_components/IVF); ties break by
-(count DESC, a ASC, b ASC), a total order, so training is bit-
-reproducible at any parallelism and replayable as a static chained-CTE
-SQL oracle.  The training loop re-checkpoints the vocabulary every 25
-merges so the replace-chain lineage stays bounded at any ``n_merges``
-(same pattern as the CC pointer-jumping loop).
+A word's symbol sequence is a STRING — symbols joined by two spaces,
+padded with one space on each end (symbols never contain whitespace, by
+tokenization).  That is the form the DuckDB oracle rewrites with a
+literal ``replace(seq, ' a  b ', ' ab ')`` per merge (left-to-right
+non-overlapping, EXACTLY the greedy merge including ``a a a → (aa) a``);
+here every word gets its final sequence from :func:`apply_merges`.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_auto_label_spark.operators.textstats import word_tokens
-
-
-def _q(s: str) -> str:
-    """Escape a symbol for embedding in a single-quoted Spark SQL
-    literal.  Backslashes FIRST: Spark string literals process escape
-    sequences, so an unescaped '\\' would corrupt the merge pattern
-    (silently un-merging the real pair and potentially merging an
-    unrelated one) on corpora with code/paths/LaTeX tokens."""
-    return s.replace("\\", "\\\\").replace("'", "''")
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -56,88 +46,41 @@ def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_INIT_SEQ = (
-    "concat(' ', array_join(transform(sequence(1, length(word)), "
-    "i -> substr(word, i, 1)), '  '), ' ')"
-)
 # split back to symbols: trim the outer pad, split on the 2-space joiner
 _SYMS = "split(trim(seq), '  ')"
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(a, b, total): adjacent-symbol pair frequencies, weighted by word
-    count.  The sequence(1, n-1) is guarded — Spark's sequence DESCENDS
-    when start > stop instead of being empty."""
-    pairs = F.expr(
-        f"CASE WHEN size({_SYMS}) >= 2 THEN "
-        f"transform(sequence(1, size({_SYMS}) - 1), "
-        f"i -> struct(element_at({_SYMS}, i) AS a, "
-        f"element_at({_SYMS}, i + 1) AS b)) "
-        "ELSE array() END"
-    )
-    return (
-        words.select("cnt", F.explode(pairs).alias("p"))
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("cnt").alias("total"))
-    )
-
-
 def bpe_train(
-    df: DataFrame, n_merges: int, text_col: str = "text"
+    df: DataFrame,
+    n_merges: int,
+    text_col: str = "text",
+    max_vocab: int = 4_000_000,
 ) -> tuple[list[dict], DataFrame]:
     """Train ``n_merges`` BPE merges on ``df[text_col]``.
 
     Returns ``(merges, words)``: ``merges`` is the ordered merge table
-    (step, a, b, merged, total — one bounded driver row per step), and
-    ``words`` is the vocabulary frame (word, cnt, seq) with ``seq``
-    holding each word's FINAL symbol sequence (two-space joined, padded)
-    — the segmenter state that :func:`bpe_segment_counts` and any
-    encoder join against.  Raises if the corpus runs out of mergeable
-    pairs before ``n_merges`` (pick n_merges well under capacity; the
-    SQL oracle replays a fixed-length chain)."""
+    (step, a, b, merged, total), and ``words`` is the vocabulary frame
+    (word, cnt, seq) over EVERY corpus word, with ``seq`` holding the
+    word's final symbol sequence (two-space joined, padded) — the
+    segmenter state that :func:`bpe_segment_counts` and any encoder join
+    against.  Pair statistics come from the top ``max_vocab`` words only
+    (frequency-cutoff semantics); words beyond the cap are still
+    segmented by the trained table.  Raises if the corpus runs out of
+    mergeable pairs before ``n_merges`` (pick n_merges well under
+    capacity; the SQL oracle replays a fixed-length chain).
+
+    The word count is materialized once and feeds both the head pull and
+    the encoder replay; the returned frame is materialized once too and
+    keeps the word count's size statistics, so a join against it
+    broadcasts the vocabulary, not the corpus side."""
     if n_merges < 1:
         raise ValueError("bpe_train: n_merges must be >= 1")
-    words = word_frequencies(df, text_col).withColumn(
-        "seq", F.expr(_INIT_SEQ)
+    wf = word_frequencies(df, text_col).localCheckpoint(eager=True)
+    head = (
+        wf.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab).collect()
     )
-    # materialize the vocabulary once — it is the distinct-word table
-    # (bounded by Zipf, not corpus size), and every merge step would
-    # otherwise re-scan the corpus through the groupBy lineage
-    words = words.localCheckpoint(eager=True)
-    merges: list[dict] = []
-    for step in range(n_merges):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
-            .first()
-        )
-        if top is None:
-            raise ValueError(
-                f"bpe_train: no adjacent pairs left at step {step} — "
-                "n_merges exceeds the corpus's merge capacity"
-            )
-        a, b, merged = top.a, top.b, top.a + top.b
-        merges.append(
-            {
-                "step": step,
-                "a": a,
-                "b": b,
-                "merged": merged,
-                "total": int(top.total),
-            }
-        )
-        words = words.withColumn(
-            "seq",
-            F.expr(
-                f"replace(seq, ' {_q(a)}  {_q(b)} ', ' {_q(merged)} ')"
-            ),
-        )
-        if (step + 1) % 25 == 0:
-            # bound the replace-chain lineage: each step's pair count
-            # re-evaluates the chain, so an unbounded chain is O(steps²)
-            # and eventually trips codegen/analyzer depth limits
-            words = words.localCheckpoint(eager=True)
-    return merges, words
+    merges = _local_bpe_delta([(r.word, int(r.cnt)) for r in head], n_merges)
+    return merges, apply_merges(wf, merges).localCheckpoint(eager=True)
 
 
 def _merge_symbols(syms: list[str], a: str, b: str) -> list[str]:
@@ -158,14 +101,14 @@ def _merge_symbols(syms: list[str], a: str, b: str) -> list[str]:
 
 def _local_bpe_delta(
     vocab: list[tuple[str, int]], n_merges: int
-) -> tuple[list[dict], list[list[str]]]:
+) -> list[dict]:
     """The standard incremental BPE trainer (Sennrich's reference
     ``learn_bpe`` index structure): pair counts plus a pair→words inverted
     index, updated per merge by re-counting ONLY the words whose sequence
     contains the merged pair.  O(affected words) per step instead of a
-    full corpus pass; tie-break (count DESC, a ASC, b ASC) — identical to
-    the distributed loop's total order (pytest identity in
-    tests/test_bpe.py)."""
+    full corpus pass; tie-break (count DESC, a ASC, b ASC).  Returns the
+    merge table (tests/test_bpe.py checks it against a from-scratch
+    greedy reference)."""
     seqs = [list(w) for w, _ in vocab]
     cnts = [c for _, c in vocab]
     pair_counts: dict[tuple[str, str], int] = {}
@@ -188,115 +131,78 @@ def _local_bpe_delta(
         merges.append(
             {"step": step, "a": a, "b": b, "merged": a + b, "total": total}
         )
-        from collections import Counter
-
         for idx in pair_words.get((a, b), set()).copy():
             old = seqs[idx]
             new = _merge_symbols(old, a, b)
             c = cnts[idx]
-            # subtract the word's old adjacencies, add the new ones —
-            # the per-word form of Sennrich's update_pair_statistics.
-            # Occurrence Counters, not per-position loops: a pair can
-            # occur several times in one word, but its index-set
-            # membership flips at most once.
-            old_pc = Counter(zip(old, old[1:]))
+            # apply the word's NET change in adjacencies — the per-word
+            # form of Sennrich's update_pair_statistics.  Occurrence
+            # Counters, not per-position loops: a pair can occur several
+            # times in one word; pairs away from the merge sites cancel
+            # out and are never touched.
             new_pc = Counter(zip(new, new[1:]))
-            for p, k in old_pc.items():
-                left = pair_counts[p] - c * k
+            diff = Counter(new_pc)
+            diff.subtract(zip(old, old[1:]))
+            for p, k in diff.items():
+                if not k:
+                    continue
+                left = pair_counts.get(p, 0) + c * k
                 if left:
                     pair_counts[p] = left
                 else:
                     del pair_counts[p]
-            for p, k in new_pc.items():
-                pair_counts[p] = pair_counts.get(p, 0) + c * k
-            for p in old_pc.keys() - new_pc.keys():
-                ws = pair_words[p]
-                ws.discard(idx)
-                if not ws:
-                    del pair_words[p]
-            for p in new_pc.keys():
-                pair_words.setdefault(p, set()).add(idx)
+                if k > 0:
+                    pair_words.setdefault(p, set()).add(idx)
+                elif p not in new_pc:
+                    ws = pair_words[p]
+                    ws.discard(idx)
+                    if not ws:
+                        del pair_words[p]
             seqs[idx] = new
-    return merges, seqs
+    return merges
 
 
 def apply_merges(
     words: DataFrame, merges: list[dict], word_col: str = "word"
 ) -> DataFrame:
     """Add ``seq`` (two-space joined, padded) to a ``(word, …)`` frame by
-    replaying the trained merge table per word — the BPE ENCODER for
-    words outside the trainer's collected vocabulary (and for unseen
-    text).  Per-word replay in global merge order is identical to the
-    global replace-chain replay: each ``replace`` only reads the word's
-    own sequence.  Arrow-batched pandas UDF (the merge table broadcasts
-    in the closure; it is merges-sized, never corpus-sized)."""
+    replaying the trained merge table per word, in merge order — the BPE
+    ENCODER, for the trainer's vocabulary frame and for unseen text.
+    Per-word replay equals the oracle's global replace-chain: each
+    ``replace`` only reads the word's own sequence.  A word skips the
+    steps whose pair it does not contain: the next step to fire is the
+    earliest later step whose pair is adjacent in the word now, so one
+    word costs O(merges it takes × its length), not O(merge table).
+    Arrow-batched pandas UDF (the merge table broadcasts in the closure;
+    it is merges-sized, never corpus-sized)."""
     from pyspark.sql.functions import pandas_udf
 
-    pairs = [(m["a"], m["b"]) for m in merges]
+    # every step of a pair, ascending: the skip stays an exact replay
+    # even for a table that repeats a pair
+    steps: dict[tuple[str, str], list[int]] = {}
+    for i, m in enumerate(merges):
+        steps.setdefault((m["a"], m["b"]), []).append(i)
 
     @pandas_udf("string")
     def _seq(col: pd.Series) -> pd.Series:
         def enc(w: str) -> str:
-            syms = list(w)
-            present = set(zip(syms, syms[1:]))
-            for a, b in pairs:
-                if (a, b) in present:
-                    syms = _merge_symbols(syms, a, b)
-                    present = set(zip(syms, syms[1:]))
-            return " " + "  ".join(syms) + " "
+            syms, done = list(w), -1
+            while True:
+                nxt = None
+                for p in zip(syms, syms[1:]):
+                    for s in steps.get(p, ()):
+                        if s > done:
+                            if nxt is None or s < nxt:
+                                nxt = s
+                            break
+                if nxt is None:
+                    return " " + "  ".join(syms) + " "
+                done = nxt
+                syms = _merge_symbols(syms, merges[done]["a"], merges[done]["b"])
 
         return col.map(enc)
 
     return words.withColumn("seq", _seq(F.col(word_col)))
-
-
-def bpe_train_fast(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    max_vocab: int = 4_000_000,
-) -> tuple[list[dict], DataFrame]:
-    """:func:`bpe_train` with the per-merge full pair-count job replaced
-    by the standard incremental algorithm — bit-identical output
-    (pytest identity), one distributed aggregate instead of ``n_merges``
-    sequential jobs.
-
-    Shape (the production tokenizer-trainer design — HuggingFace
-    tokenizers / SentencePiece train exactly this way): pair statistics
-    live on the DISTINCT-WORD vocabulary, which is Zipf-bounded (10⁷–10⁸
-    rows at 100 TB, not 10¹²), so ONE map-side-combined word count runs
-    distributed, the top ``max_vocab`` rows by (cnt DESC, word) are a
-    BOUNDED driver pull (the cap is the same knob as every production
-    trainer's min-frequency cutoff), and the merge loop itself is local
-    delta maintenance over that table — O(affected words) per merge,
-    turning 32k-merge production vocabs from 32k Spark jobs into one.
-    Words beyond the cap (rare at any realistic cap) never influence pair
-    statistics — same semantics as a frequency cutoff — and get their
-    final segmentation from the trained table via :func:`apply_merges`.
-    """
-    if n_merges < 1:
-        raise ValueError("bpe_train: n_merges must be >= 1")
-    wf = word_frequencies(df, text_col)
-    head = (
-        wf.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab).collect()
-    )
-    merges, seqs = _local_bpe_delta(
-        [(r.word, int(r.cnt)) for r in head], n_merges
-    )
-    spark = df.sparkSession
-    trained = spark.createDataFrame(
-        [
-            (r.word, int(r.cnt), " " + "  ".join(s) + " ")
-            for r, s in zip(head, seqs)
-        ],
-        "word string, cnt long, seq string",
-    )
-    if len(head) < max_vocab:
-        return merges, trained
-    rest = wf.join(
-        trained.select("word"), "word", "left_anti"
-    )
-    return merges, trained.unionByName(apply_merges(rest, merges))
 
 
 def bpe_vocab(words: DataFrame) -> DataFrame:

@@ -185,6 +185,13 @@ def temperature_resample(
     counts = {r[0]: int(r[1]) for r in df.groupBy(group_col).count().collect()}
     if not counts:
         raise ValueError("temperature_resample: empty input")
+    if None in counts:
+        # a NULL group would take a share of ``total`` that no row can
+        # fill (NULL never equals a target key) — reject it, as
+        # mixture_sample rejects groups it cannot weight
+        raise ValueError(
+            f"temperature_resample: NULL values in group column {group_col!r}"
+        )
     shares = {g: float(n) ** alpha for g, n in counts.items()}
     remaining = float(sum(shares.values()))
     left = total

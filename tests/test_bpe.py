@@ -33,17 +33,21 @@ def _ref_train(word_counts, n_merges):
             pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )[0]
         merges.append((step, a, b, a + b, tot))
-        for w, syms in seqs.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            seqs[w] = out
+        seqs = {w: _ref_merge(syms, a, b) for w, syms in seqs.items()}
     return merges, seqs, False
+
+
+def _ref_merge(syms, a, b):
+    """One merge step on a symbol list, left-to-right non-overlapping."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 def _word_counts(rows):
@@ -112,9 +116,9 @@ def test_bpe_exhaustion_raises(spark):
 
 
 def test_bpe_backslash_symbols_survive_sql_escaping(spark):
-    # review finding: Spark string literals process backslash escapes,
-    # so an unescaped '\' in a merge pattern silently corrupted the
-    # rewrite; symbols from code/path corpora must merge correctly
+    # symbols from code/path corpora: backslashes and quotes are plain
+    # characters to the trainer and the encoder (and must stay so if the
+    # merge table is ever rendered into SQL, as the DuckDB oracle does)
     data = [(0, r"a\b a\b a\b x\ x\ x\ c'd c'd")]
     df = spark.createDataFrame(data, "doc_id long, text string")
     wc = _word_counts([data[0][1]])
@@ -127,69 +131,48 @@ def test_bpe_backslash_symbols_survive_sql_escaping(spark):
     } == want_seqs
 
 
-def test_bpe_train_fast_identity_with_distributed_loop(spark):
-    """The incremental (delta-update) trainer must be bit-identical to
-    the per-merge-job distributed loop: same merge table, same final
-    segmentations — on a real corpus deep enough that merged symbols
-    themselves merge again."""
+def test_bpe_train_matches_greedy_reference_on_transcripts(spark):
+    """Same merge table and final segmentations as the reference on a
+    real corpus deep enough that merged symbols themselves merge again."""
     from ocr_auto_label_spark.datagen import transcripts_parquet
-    from ocr_auto_label_spark.operators.bpe import bpe_train_fast
 
     df = spark.read.parquet(transcripts_parquet(2_000))
-    slow_m, slow_w = bpe_train(df, 24)
-    fast_m, fast_w = bpe_train_fast(df, 24)
-    assert fast_m == slow_m
-    slow = {(r.word, r.cnt, r.seq) for r in slow_w.collect()}
-    fast = {(r.word, r.cnt, r.seq) for r in fast_w.collect()}
-    assert fast == slow
-
-
-def test_bpe_apply_merges_equals_global_replay(spark):
-    """Per-word replay of the trained merge table (the encoder path used
-    for beyond-cap words) equals the global replace-chain result."""
-    from ocr_auto_label_spark.operators.bpe import apply_merges
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    merges, words = bpe_train(df, 6)
-    replayed = apply_merges(words.drop("seq"), merges)
-    want = {(r.word, r.seq) for r in words.select("word", "seq").collect()}
-    got = {(r.word, r.seq) for r in replayed.select("word", "seq").collect()}
-    assert got == want
-
-
-def test_bpe_train_fast_capped_vocab(spark):
-    """max_vocab below the distinct-word count: pair statistics come from
-    the top-cap words only (frequency-cutoff semantics), beyond-cap words
-    still get a seq via the encoder, and every word appears exactly once."""
-    from ocr_auto_label_spark.operators.bpe import (
-        apply_merges,
-        bpe_train_fast,
-        word_frequencies,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wf = word_frequencies(df)
-    n_words = wf.count()
-    cap = 12
-    assert cap < n_words
-    merges, words = bpe_train_fast(df, 4, max_vocab=cap)
-    # merge table == reference trained on the capped vocabulary
-    import pyspark.sql.functions as F
-
-    head = {
-        r.word: r.cnt
-        for r in wf.orderBy(F.desc("cnt"), F.asc("word")).limit(cap).collect()
-    }
-    want_merges, _, _ = _ref_train(Counter(head), 4)
+    wc = _word_counts([r.text for r in df.select("text").collect()])
+    want_merges, want_seqs, _ = _ref_train(wc, 24)
+    assert any(len(a) > 1 and len(b) > 1 for _, a, b, _, _ in want_merges)
+    merges, words = bpe_train(df, 24)
     got = [(m["step"], m["a"], m["b"], m["merged"], m["total"]) for m in merges]
     assert got == want_merges
     rows = words.collect()
-    assert len(rows) == n_words
-    assert len({r.word for r in rows}) == n_words
-    # beyond-cap words carry the encoder's replay of the same merge table
-    replay = {
-        r.word: r.seq
-        for r in apply_merges(wf.select("word", "cnt"), merges).collect()
-    }
-    for r in rows:
-        assert r.seq == replay[r.word], r.word
+    assert {r.word: r.cnt for r in rows} == dict(wc)
+    assert {r.word: r.seq.strip().split("  ") for r in rows} == want_seqs
+
+
+def _ref_encode(word, merges):
+    """Replay a reference merge table on one word, in merge order."""
+    syms = list(word)
+    for _, a, b, _, _ in merges:
+        syms = _ref_merge(syms, a, b)
+    return syms
+
+
+def test_bpe_train_capped_vocab(spark):
+    """max_vocab below the distinct-word count: pair statistics come from
+    the top-cap words only (frequency-cutoff semantics), beyond-cap words
+    are still segmented by the trained table, and every word appears
+    exactly once."""
+    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    wc = _word_counts([r.text for r in df.select("text").collect()])
+    cap = 12
+    assert cap < len(wc)
+    head = dict(sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:cap])
+    want_merges, want_seqs, _ = _ref_train(Counter(head), 4)
+    merges, words = bpe_train(df, 4, max_vocab=cap)
+    got = [(m["step"], m["a"], m["b"], m["merged"], m["total"]) for m in merges]
+    assert got == want_merges
+    rows = words.collect()
+    assert len(rows) == len(wc)
+    assert {r.word: r.cnt for r in rows} == dict(wc)
+    got_seqs = {r.word: r.seq.strip().split("  ") for r in rows}
+    assert {w: got_seqs[w] for w in head} == want_seqs
+    assert got_seqs == {w: _ref_encode(w, want_merges) for w in wc}

@@ -13,6 +13,7 @@ from __future__ import annotations
 import hashlib
 import re
 import struct
+from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
@@ -450,7 +451,7 @@ def test_curation_with_semantic_dedup(spark, tmp_path):
 
 
 def test_curation_with_bpe_tokenizer_training(spark, tmp_path):
-    from ocr_auto_label_spark.operators.bpe import bpe_train, bpe_vocab
+    from test_bpe import _ref_train, _word_counts
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = str(tmp_path / "bpe")
@@ -465,17 +466,17 @@ def test_curation_with_bpe_tokenizer_training(spark, tmp_path):
     }
     assert summary["bpe_vocab_size"] == len(vocab) > 0
     assert len(merges) == 4
-    # the stage must equal training directly on the curated TRAIN split
-    # (tokenizer never sees eval text)
+    # the stage must equal the greedy reference trained on the curated
+    # TRAIN split (tokenizer never sees eval text)
     train = spark.read.parquet(f"{out}/curated").filter("split = 'train'")
-    want_merges, want_words = bpe_train(train, 4)
-    assert merges == sorted(
-        (m["step"], m["a"], m["b"], m["merged"], m["total"])
-        for m in want_merges
-    )
-    assert vocab == {
-        r.symbol: r.total for r in bpe_vocab(want_words).collect()
-    }
+    wc = _word_counts([r.text for r in train.select("text").collect()])
+    want_merges, want_seqs, _ = _ref_train(wc, 4)
+    assert merges == want_merges
+    want_vocab = Counter()
+    for w, syms in want_seqs.items():
+        for sym in syms:
+            want_vocab[sym] += wc[w]
+    assert vocab == dict(want_vocab)
 
 
 def test_curation_with_quality_model_selection(spark, tmp_path):
@@ -538,14 +539,20 @@ def test_curation_with_temperature_resampling(spark, tmp_path):
     assert s1["temperature_kept"] == 200
     assert sum(s1["temperature_kept_by_source"].values()) == 200
     assert sum(s1["split_counts"].values()) == 200
-    # per-source kept never exceeds what survived the gates per source
+    # per-source kept never exceeds what survived gates + dedup per
+    # source in a run without the temperature stage
+    curate_corpus(
+        spark, docs, str(tmp_path / "cur_plain"), min_tokens=20,
+        max_dup_word_frac=0.65,
+    )
     survived = {
         r[0]: r[1]
-        for r in spark.read.parquet(f"{out}/curated")
+        for r in spark.read.parquet(str(tmp_path / "cur_plain/curated"))
         .groupBy("source").count().collect()
     }
+    assert s1["temperature_kept_by_source"].keys() <= survived.keys()
     for src, k in s1["temperature_kept_by_source"].items():
-        assert survived.get(src, 0) <= k or survived[src] == k
+        assert 0 < k <= survived[src], src
     s2 = curate_corpus(
         spark, docs, str(tmp_path / "cur_temp2"), min_tokens=20,
         max_dup_word_frac=0.65, temperature_alpha=0.5,

@@ -6,6 +6,7 @@ order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -13,14 +14,18 @@ import pytest
 import __spark_entry__ as entry_mod
 from ocr_auto_label_spark.entry_queries import REGISTRY, TABLES
 
-import os
-
 SF_DIR = os.environ.get("ENTRY_TEST_SF_DIR", "/root/testdata/sf0.001")
-# sf-dependent oracle GENERATORS (extract_flagship's twin corpus, the ANN
-# replay's probe/codebook literals) read this env var with a driver-scale
-# sf0.01 default — pin it to the directory this test run actually uses so
-# both sides always see the same input
-os.environ["ENTRY_TEST_SF_DIR"] = SF_DIR
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _pin_oracle_sf_dir():
+    """sf-dependent oracle GENERATORS (extract_flagship's twin corpus, the
+    ANN replay's probe/codebook literals) and the oracle cache key read
+    ENTRY_TEST_SF_DIR with an sf0.01 default — pin it to the
+    directory the DuckDB views read, for this module only."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("ENTRY_TEST_SF_DIR", SF_DIR)
+        yield
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +60,11 @@ def _normalize(rows, cols):
     return sorted(normed, key=lambda t: tuple((v is None, str(v)) for v in t))
 
 
-ORACLE_NAMES = sorted(entry_mod.oracle_sql().keys())
+# the names oracle_sql() returns, read without running the generators
+# (collection happens before the fixture pins the directory)
+ORACLE_NAMES = sorted(
+    n for n, (_, oracle) in REGISTRY.items() if oracle is not None
+)
 
 # The driver's value-hash canonicalization is rendering-sensitive: DuckDB
 # HUGEINT round-trips through pandas as float64 ("425.0" vs Spark BIGINT's

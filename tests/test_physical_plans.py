@@ -402,3 +402,45 @@ def test_sketch_builds_are_single_pass_single_shuffle(spark):
         assert plan.count("Exchange hashpartitioning") == 1, build.__name__
         assert "BatchEvalPython" not in plan, build.__name__
         assert "Join" not in plan, build.__name__
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending into AQE's
+    final plan and into query stages (whose plans are not children)."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    yield node
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_bpe_segment_counts_broadcasts_the_vocabulary(spark):
+    """The encoder join builds its hash table from the trained
+    vocabulary frame, never from the exploded corpus: the vocabulary
+    keeps the word count's statistics, so AQE sees which side is small."""
+    from ocr_auto_label_spark.operators.bpe import bpe_segment_counts, bpe_train
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    _, words = bpe_train(docs, 6)
+    df = bpe_segment_counts(docs, words)
+    df.collect()
+    root = df._jdf.queryExecution().executedPlan()
+    joins = [
+        n for n in _plan_nodes(root)
+        if n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+    ]
+    assert joins, "the encoder join is not a broadcast join"
+    for j in joins:
+        right = j.buildSide().toString() == "BuildRight"
+        build, probe = (j.right(), j.left()) if right else (j.left(), j.right())
+        build_names = [n.nodeName() for n in _plan_nodes(build)]
+        probe_names = [n.nodeName() for n in _plan_nodes(probe)]
+        assert "Generate" in probe_names, probe_names
+        assert "Generate" not in build_names, build_names
+        # the build side is the materialized vocabulary frame
+        assert any("ExistingRDD" in n for n in build_names), build_names

@@ -288,3 +288,16 @@ def test_temperature_resample_validates(spark):
         temperature_resample(df, "grp", 1.5, 100)
     with pytest.raises(ValueError):
         temperature_resample(df, "grp", 0.5, 0)
+
+
+def test_temperature_resample_rejects_null_group_keys(spark):
+    """A NULL group would claim a share of ``total`` that no row can
+    fill, so the kept total silently fell short (and mixed None/str keys
+    broke the driver-side sort) — the operator must refuse it."""
+    from ocr_auto_label_spark.operators.sampling import temperature_resample
+
+    rows = [(i, None if i % 7 == 0 else ("big" if i < 600 else "rare"))
+            for i in range(700)]
+    df = spark.createDataFrame(rows, "doc_id long, grp string")
+    with pytest.raises(ValueError, match="grp"):
+        temperature_resample(df, "grp", 0.5, 350)
